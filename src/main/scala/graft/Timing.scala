@@ -57,7 +57,13 @@ object Timing {
     sampleNoopWrite(name, fn, spark, dir, reps, observeRows).toMeasured
 
   /** [[medianNoopWrite]]'s body, returning every rep's duration so a
-    * caller can pool further batches before taking the median. */
+    * caller can pool further batches before taking the median.
+    *
+    * Contract: no session-level persisted state survives a rep. After
+    * every rep [[releaseResidue]] clears the SQL cache and unpersists
+    * EVERY persistent RDD in the shared context, including ones the
+    * caller made before calling — a cache or table warmed up front is
+    * evicted after the first rep, and later reps measure without it. */
   def sampleNoopWrite(name: String, fn: (SparkSession, String) => DataFrame,
                       spark: SparkSession, dir: String,
                       reps: Int, observeRows: Boolean = false): Sampled = {
@@ -104,8 +110,11 @@ object Timing {
     * timed regions; blocking, so no async eviction bleeds into the
     * next rep. Each rep reconstructs its plans from the parquet
     * inputs, so nothing semantic is lost — this only stops state from
-    * leaking between measurements. Opt out (to reproduce the old
-    * shared-state behaviour) with SPARK_GRAFT_BENCH_ISOLATE=0. */
+    * leaking between measurements. It does not tell the rep's state
+    * from the caller's: everything persisted in the session goes, so a
+    * caller must not rely on a cache it warmed before measuring. Opt
+    * out (to reproduce the old shared-state behaviour) with
+    * SPARK_GRAFT_BENCH_ISOLATE=0. */
   private val isolateReps: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
 

@@ -8,7 +8,11 @@ import org.apache.spark.sql.functions._
   * all of this with per-group Python loops over sorted pandas frames;
   * here each is a composition of built-in window expressions — fully
   * codegen'd, shuffles once on the partition key, and scales to any
-  * number of groups.
+  * number of groups and any group length: every frame either grows
+  * from the partition start or is bounded, so each group is one linear
+  * scan (a frame that ends at `unboundedFollowing` but starts after
+  * `unboundedPreceding` shrinks, and Spark recomputes it per row —
+  * O(n²) in group length; PlanSpec keeps such frames out).
   */
 object Windows {
 
@@ -16,21 +20,44 @@ object Windows {
     * interpolation of nulls over row position within the sort order —
     * pandas `interpolate(method='linear')` semantics (position-based,
     * NOT timestamp-distance) — followed by ffill then bfill at edges.
+    * A row at position `rn` between anchors `(prn, p)` and `(nrn, n)`
+    * gets `p + ((n − p)·(rn − prn)) / (nrn − prn)` in double arithmetic.
+    *
+    * Unlike pandas, only SQL NULL is a gap: NaN and ±Inf are values, so
+    * they anchor the fill and propagate through it (a gap between an
+    * Inf and a finite anchor fills with NaN; pandas would skip a NaN
+    * anchor). Rows with tied order keys take the positions
+    * `row_number` gives them, and both anchor windows order by that
+    * position, so ties resolve the same way in both directions.
+    *
+    * Cost: one shuffle on the partition key, then one linear scan per
+    * group. The previous anchor is the last non-null one in the frame
+    * growing from the group start; the next anchor is the same
+    * aggregate over the MIRRORED order, so its frame grows too (the
+    * trick [[Temporal.asOfJoinForward]] uses) instead of the shrinking
+    * `1..unboundedFollowing` frame Spark would recompute per row. The
+    * two extra orders add two per-partition sorts and no exchange.
     *
     * Returns `df` + `<valueCol>_filled`.
     */
   def interpolateLinear(df: DataFrame, partition: Seq[String],
-                        order: Seq[Column], valueCol: String): DataFrame = {
+                        order: Seq[Column], valueCol: String): DataFrame =
+    interpolateLinearAt(df, partition, order, valueCol).drop("_rn")
+
+  /** [[interpolateLinear]] keeping `_rn`, the 1-based position each row
+    * was filled at — the only way to observe how tied order keys were
+    * resolved (tests compare against a reference at those positions). */
+  private[graft] def interpolateLinearAt(df: DataFrame, partition: Seq[String],
+                                         order: Seq[Column], valueCol: String): DataFrame = {
     val v = col(valueCol)
-    val w = Window.partitionBy(partition.map(col): _*).orderBy(order: _*)
-    val before = w.rowsBetween(Window.unboundedPreceding, -1)
-    val after = w.rowsBetween(1, Window.unboundedFollowing)
-    val rn = row_number().over(w)
-    val anchor = when(v.isNotNull, struct(rn.as("rn"), v.as("v")))
-    val prev = last(anchor, ignoreNulls = true).over(before)
-    val next = first(anchor, ignoreNulls = true).over(after)
+    val group = Window.partitionBy(partition.map(col): _*)
+    val rn = row_number().over(group.orderBy(order: _*))
+    val before = group.orderBy(col("_rn")).rowsBetween(Window.unboundedPreceding, -1)
+    val after = group.orderBy(col("_rn").desc).rowsBetween(Window.unboundedPreceding, -1)
+    val anchor = when(v.isNotNull, struct(col("_rn").as("rn"), v.as("v")))
     df.withColumn("_rn", rn)
-      .withColumn("_prev", prev).withColumn("_next", next)
+      .withColumn("_prev", last(anchor, ignoreNulls = true).over(before))
+      .withColumn("_next", last(anchor, ignoreNulls = true).over(after))
       .withColumn(s"${valueCol}_filled",
         coalesce(
           v,
@@ -39,7 +66,7 @@ object Windows {
             (col("_next.rn") - col("_prev.rn")).cast("double"),
           col("_prev.v"),   // trailing gap → ffill
           col("_next.v")))  // leading gap → bfill
-      .drop("_rn", "_prev", "_next")
+      .drop("_prev", "_next")
   }
 
   /** W2 (ref `temperaturas_rm.py:192-222`): seasonal gap fill — a null

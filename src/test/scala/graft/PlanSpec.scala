@@ -271,6 +271,59 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, s"global (un-partitioned) Window in: $offenders")
   }
 
+  test("W1 gap fill: no shrinking window frame, one shuffle on the partition key") {
+    // a frame ending at unboundedFollowing that starts after
+    // unboundedPreceding shrinks row by row and Spark recomputes it per
+    // row — O(n²) in group length (the old W1 next-anchor frame). Pin
+    // the three W1 plans to grow-only frames over a single hash
+    // exchange on the group key; a caller's final orderBy may add its
+    // range exchange on top.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, SpecifiedWindowFrame,
+      UnboundedFollowing, UnboundedPreceding, WindowExpression}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    def allOps(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => allOps(a.executedPlan)
+      case s: QueryStageExec        => allOps(s.plan)
+      case other                    => other +: other.children.flatMap(allOps)
+    }
+    def check(what: String, df: DataFrame, key: String): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val ops = allOps(plan)
+      val frames = ops.collect { case w: WindowExec => w }
+        .flatMap(_.windowExpression.flatMap(_.collect {
+          case WindowExpression(_, spec) => spec.frameSpecification
+        }))
+      assert(frames.nonEmpty, s"$what: no window frames\n$plan")
+      val shrinking = frames.collect {
+        case f @ SpecifiedWindowFrame(_, lower, UnboundedFollowing)
+          if lower != UnboundedPreceding => f
+      }
+      assert(shrinking.isEmpty, s"$what: shrinking frame $shrinking\n$plan")
+      val shuffles = ops.collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+        .filterNot(_.isInstanceOf[RangePartitioning])
+      val onKey = shuffles.collect {
+        case HashPartitioning(Seq(a: Attribute), _) if a.name == key => a
+      }
+      assert(shuffles.size == 1 && onKey.size == 1, s"$what: shuffles $shuffles\n$plan")
+    }
+    val series = Seq(("a", 1, Some(1.0)), ("a", 2, None), ("a", 3, Some(3.0)),
+      ("b", 1, None)).toDF("g", "ord", "v")
+    check("interpolateLinear",
+      graft.operators.Windows.interpolateLinear(series, Seq("g"), Seq(col("ord")), "v"), "g")
+    val temps = Seq(("Santiago", "2020-01-01", Some(10.0)), ("Santiago", "2020-01-02", None))
+      .toDF("Comuna", "FechaStr", "Temperatura_Media")
+      .withColumn("Fecha", to_date(col("FechaStr")))
+    check("paso3Reconstruir lineal",
+      graft.pipelines.TemperaturasRM.paso3Reconstruir(temps, "lineal"), "Comuna")
+    check("q_w1_interp", SparkEntry.queries("q_w1_interp")(spark, sf), "user_id")
+  }
+
   test("Q21: EXISTS/NOT-EXISTS decorrelate to hash semi/anti joins, not BNLJ") {
     // the correlated "another supplier on the same order" EXISTS and
     // the "no other late supplier" NOT EXISTS must plan as equi

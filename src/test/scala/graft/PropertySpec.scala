@@ -24,6 +24,90 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("W1 interpolateLinear is bit-exact against a plain-Scala reference of its formula") {
+    // Per group in position order: a value stays; a gap between anchors
+    // (prn, p) and (nrn, n) gets p + ((n - p) * (rn - prn)) / (nrn - prn);
+    // else ffill, else bfill. NaN and ±Inf are values (they anchor and
+    // propagate) — pandas would treat NaN as a gap; this asserts ours.
+    def reference(vs: IndexedSeq[Option[Double]]): IndexedSeq[Option[Double]] = {
+      val n = vs.length
+      val prev = new Array[Option[(Int, Double)]](n)
+      val next = new Array[Option[(Int, Double)]](n)
+      var seen = Option.empty[(Int, Double)]
+      for (i <- 0 until n) { prev(i) = seen; vs(i).foreach(x => seen = Some((i + 1, x))) }
+      seen = None
+      for (i <- n - 1 to 0 by -1) { next(i) = seen; vs(i).foreach(x => seen = Some((i + 1, x))) }
+      vs.indices.map { i =>
+        val rn = i + 1
+        vs(i).orElse((prev(i), next(i)) match {
+          case (Some((prn, p)), Some((nrn, nx))) =>
+            Some(p + ((nx - p) * (rn - prn).toDouble) / (nrn - prn).toDouble)
+          case (Some((_, p)), None) => Some(p)
+          case (None, Some((_, nx))) => Some(nx)
+          case _ => None
+        })
+      }
+    }
+    def value(): Double = rnd.nextInt(40) match {
+      case 0 => Double.NaN
+      case 1 => Double.PositiveInfinity
+      case 2 => Double.NegativeInfinity
+      case 3 => -0.0
+      case _ => rnd.nextGaussian() * 100
+    }
+    // alternating null / value runs; a null run is long (up to 600) one
+    // time in five, and the first run is a gap half the time, so leading,
+    // trailing and long interior gaps all occur
+    def series(n: Int): IndexedSeq[Option[Double]] = {
+      val out = IndexedSeq.newBuilder[Option[Double]]
+      var left = n
+      var gap = rnd.nextBoolean()
+      while (left > 0) {
+        val len = math.min(left,
+          if (gap && rnd.nextInt(5) == 0) 1 + rnd.nextInt(600) else 1 + rnd.nextInt(8))
+        out ++= Seq.fill(len)(if (gap) None else Some(value()))
+        left -= len; gap = !gap
+      }
+      out.result()
+    }
+    def bits(o: Option[Double]): Option[Long] = o.map(java.lang.Double.doubleToLongBits)
+    cases(3) {
+      val groups = Seq.tabulate(6)(i => s"g$i" -> series(rnd.nextInt(3000))) ++ Seq(
+        "all_null" -> IndexedSeq.fill(40)(None),
+        "one_value" -> IndexedSeq(Some(value())),
+        "one_null" -> IndexedSeq(None),
+        "edges" -> (IndexedSeq.fill(30)(None) ++ series(500) ++ IndexedSeq.fill(30)(None)))
+      // order keys advance by 0 a quarter of the time: tied keys; rows
+      // go in shuffled, so the input order does not hint the positions
+      groups.flatMap { case (g, vs) =>
+        val ord = vs.indices.scanLeft(0)((k, _) => k + (if (rnd.nextInt(4) == 0) 0 else 1))
+        vs.indices.map(i => (g, ord(i), vs(i)))
+      }
+    } { rows =>
+      val df = rnd.shuffle(rows).toDF("g", "ord", "v")
+      val got = Windows.interpolateLinearAt(df, Seq("g"), Seq(col("ord")), "v")
+        .select("g", "ord", "v", "_rn", "v_filled")
+        .as[(String, Int, Option[Double], Int, Option[Double])].collect()
+        .groupBy(_._1)
+      assert(got.keySet === rows.map(_._1).toSet)
+      got.foreach { case (g, out) =>
+        val byPos = out.sortBy(_._4).toIndexedSeq
+        // positions are 1..n in order-key order; ties take any order
+        assert(byPos.map(_._4) === (1 to byPos.length), g)
+        assert(byPos.map(_._2) === byPos.map(_._2).sorted, g)
+        val want = reference(byPos.map(_._3))
+        byPos.zip(want).foreach { case (r, w) =>
+          assert(bits(r._5) === bits(w), s"$g rn=${r._4}: got ${r._5}, want $w")
+        }
+      }
+    }
+    // empty input: empty output with the filled column
+    val empty = Windows.interpolateLinear(Seq.empty[(String, Int, Option[Double])]
+      .toDF("g", "ord", "v"), Seq("g"), Seq(col("ord")), "v")
+    assert(empty.columns.toSeq === Seq("g", "ord", "v", "v_filled"))
+    assert(empty.count() === 0)
+  }
+
   test("headline results are bit-identical across shuffle-partition layouts") {
     // the engine's auditability claim: re-partitioning (a 4-core dev
     // box vs a 1000-executor cluster) must not change a single bit of

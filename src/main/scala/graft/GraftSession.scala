@@ -16,8 +16,38 @@ import org.apache.spark.sql.SparkSession
   *   Harmless for the timestamp[us] generation (reads as
   *   TIMESTAMP/TIMESTAMP_NTZ as usual) — every ts consumer branches on
   *   the resolved dtype via [[Tables.epochSeconds]]/[[Tables.eventTime]].
+  * - Generated-code reuse: `spark.sql.codegen.cache.maxEntries` =
+  *   [[CodegenCacheEntries]] and `spark.sql.codegen.useIdInClassName`
+  *   = false. The same plans run again and again (every replayed
+  *   extract/load, every bench rep), but with Spark's defaults each
+  *   execution recompiled its whole-stage classes: the 100-entry LRU
+  *   class cache is smaller than one benchmark pass's working set
+  *   (measured working sets on [[CodegenCacheEntries]]), so it never
+  *   hit, and identical code compiled again under a new name
+  *   (`GeneratedIteratorForCodegenStage13` vs `…14`) whenever AQE
+  *   numbered the stages differently. Measured per
+  *   replayed afg_lifecycles pass: ~290 Janino compiles (4-5 s of
+  *   compile time) at Spark's defaults, 6-19 with the cap alone, 0-7
+  *   with both settings (CodegenReuseSpec holds a replay to 0).
+  *   The cap is a STATIC conf, read exactly once, when Spark's
+  *   `CodeGenerator` object initialises (from `SQLConf.get`, i.e. the
+  *   session that first generates code): it cannot be changed on a
+  *   running session, and a JVM whose first codegen happened under
+  *   another session keeps that session's cap. Plan strings keep their
+  *   `*(N)` stage markers; only the generated class names lose the
+  *   suffix (every class is `GeneratedIterator`), so a stack trace no
+  *   longer names its codegen stage.
   */
 object GraftSession {
+  /** Codegen class-cache cap ([[GraftSession]] doc): at least 2× the
+    * largest measured working set and finite, so a long-lived
+    * session's Metaspace stays bounded. Working sets, counted as the
+    * compiles of a whole run under an unbounded cache (one entry per
+    * class and class loader; local tasks load apart from the driver):
+    * one full [[Bench]] rep at sf0.1 1,613, afg_lifecycles 257,
+    * contract_sf0.1 225. */
+  val CodegenCacheEntries = 4096
+
   def apply(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
             appName: String = "graft"): SparkSession = configure(
     SparkSession.builder().master(master).appName(appName)
@@ -51,6 +81,8 @@ object GraftSession {
     // mid-width window, it does not retune for local mode.
     .config("spark.shuffle.sort.bypassMergeThreshold", "64")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    .config("spark.sql.codegen.useIdInClassName", "false")
   // NOTE: partition-discovery threshold deliberately NOT set here —
   // it is a storage-profile decision, not an engine default; local
   // entrypoints opt in via [[localFs]].

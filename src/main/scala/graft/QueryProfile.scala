@@ -3,8 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-query execution profile: where does the wall time of one bench
   * rep actually go? For each query, runs the same noop-sink rep the
@@ -19,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   *  - `plan_sec`: driver-side analysis/optimization/physical planning
   *    measured by forcing `executedPlan` on a FRESH DataFrame (at
   *    11 MB inputs Catalyst time is a real fraction of a rep);
+  *  - `codegen_compiles` / `codegen_sec`: Janino compiles and their
+  *    summed time during the rep (JVM-wide `CodegenMetrics` /
+  *    `CodeGenerator.compileTime` deltas, driver and tasks). A
+  *    replayed rep should compile ~0 classes; a non-zero median means
+  *    the codegen class cache is thrashing ([[GraftSession]] doc);
   *  - `wall_sec`: the rep's end-to-end time (what Bench reports).
   *
   * Diagnostic only — never a round artifact; exists so optimization
@@ -74,19 +81,24 @@ object QueryProfile {
         val perRep = (1 to reps).map { _ =>
           jobs.set(0); stages.set(0); tasks.set(0)
           taskNanos.set(0); shufRead.set(0); shufWrite.set(0)
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val cn0 = CodeGenerator.compileTime
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val wall = (System.nanoTime() - t0) / 1e9
           // listener events drain asynchronously; give them a beat
           Thread.sleep(120)
           (wall, jobs.get, stages.get, tasks.get,
-            taskNanos.get / 1e9, shufRead.get, shufWrite.get)
+            taskNanos.get / 1e9, shufRead.get, shufWrite.get,
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+            (CodeGenerator.compileTime - cn0) / 1e9)
         }
         val med = perRep.sortBy(_._1).apply(perRep.length / 2)
         f"""{"q":"$name","wall_sec":${med._1}%.3f,"plan_sec":$planSec%.3f,""" +
           f""""jobs":${med._2},"stages":${med._3},"tasks":${med._4},""" +
           f""""task_sec":${med._5}%.3f,"shuffle_read_mb":${med._6 / 1e6}%.2f,""" +
-          f""""shuffle_write_mb":${med._7 / 1e6}%.2f}"""
+          f""""shuffle_write_mb":${med._7 / 1e6}%.2f,""" +
+          f""""codegen_compiles":${med._8},"codegen_sec":${med._9}%.3f}"""
       }
     val json = rows.mkString("[\n", ",\n", "\n]")
     Files.write(Paths.get(out), json.getBytes("UTF-8"))

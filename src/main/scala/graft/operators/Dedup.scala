@@ -571,7 +571,10 @@ object Dedup {
     * every label/edge RDD hash-partitioned by node so all per-round
     * joins are narrow, and runs one job per round (the convergence
     * count). Non-integral ids (string keys) keep the plan-level loop,
-    * which has no dtype constraints. */
+    * which has no dtype constraints. Both arms drop a pair with a null
+    * id before the loop: a null is no node, so such a pair adds no node
+    * and no edge (the other end stays unlabeled unless another pair
+    * names it). */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 50): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -591,9 +594,8 @@ object Dedup {
     * throughout (edges and labels share one HashPartitioner), and each
     * round's blocks are unpersisted as soon as the next round lands
     * (the plan-level loop's checkpoint blocks lingered until context
-    * GC — r17's block-manager-pressure suspect). Null ids cannot match
-    * any join key and are dropped, as the join-based loop effectively
-    * does. */
+    * GC — r17's block-manager-pressure suspect). Pairs with a null id
+    * are dropped, as in [[ccPlanLoop]]. */
   private def ccLongRdd(pairs: DataFrame, aCol: String, bCol: String,
                         maxIter: Int,
                         idType: org.apache.spark.sql.types.DataType): DataFrame = {
@@ -695,8 +697,10 @@ object Dedup {
   private def ccPlanLoop(pairs: DataFrame, aCol: String, bCol: String,
                          maxIter: Int): DataFrame = {
     // symmetrize via explode, not union: a union's two branches would
-    // each re-evaluate the (possibly expensive) upstream pair plan
-    val edges0 = pairs.select(explode(array(
+    // each re-evaluate the (possibly expensive) upstream pair plan.
+    // Null-id pairs go first, as in the RDD arm: kept, a null would
+    // become a node row of its own (groupBy keeps null keys)
+    val edges0 = pairs.na.drop(Seq(aCol, bCol)).select(explode(array(
       struct(col(aCol).as("src"), col(bCol).as("dst")),
       struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select("e.src", "e.dst").distinct()

@@ -45,6 +45,39 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got === Set(("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")))
   }
 
+  test("connectedComponents: both arms drop null ids and agree on the same graph") {
+    // single-digit ids, so string order is numeric order and the two
+    // arms' min labels name the same node
+    import graft.operators.Dedup
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), Some(2L)), (None, Some(4L)),
+      (Some(5L), None), (None, None), (Some(6L), Some(7L)), (Some(4L), Some(8L)))
+    val longPairs = edges.toDF("doc_a", "doc_b")
+    val strPairs = longPairs.select(col("doc_a").cast("string").as("doc_a"),
+      col("doc_b").cast("string").as("doc_b"))
+    val viaRdd = Dedup.connectedComponents(longPairs, "doc_a", "doc_b")
+      .as[(Option[Long], Option[Long])].collect().toSet
+    val viaPlan = Dedup.connectedComponents(strPairs, "doc_a", "doc_b")
+      .as[(Option[String], Option[String])].collect()
+      .map { case (n, c) => (n.map(_.toLong), c.map(_.toLong)) }.toSet
+    assert(viaPlan === viaRdd)
+    assert(viaRdd === Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 8L -> 4L, 6L -> 6L, 7L -> 6L)
+      .map { case (n, c) => (Some(n), Some(c)) })
+  }
+
+  test("connectedComponents plan loop converges on a 10k-node string-id path graph") {
+    // the plan-level twin of the 10k long-id test below: only pointer
+    // doubling gets a 10k-diameter chain under the default maxIter = 50.
+    // Zero-padded ids keep string order equal to path order.
+    import graft.operators.Dedup
+    val chain = (0 until 10000).map(i => (f"n$i%05d", f"n${i + 1}%05d"))
+      .toDF("doc_a", "doc_b")
+    val labels = Dedup.connectedComponents(chain, "doc_a", "doc_b")
+    assert(labels.schema("cluster").dataType === StringType)
+    assert(labels.filter(col("cluster") =!= "n00000").count() === 0)
+    assert(labels.count() === 10001)
+  }
+
   test("connectedComponents RDD arm labels a deep chain needing pointer doubling") {
     // 200-node path: plain propagation needs 200 rounds; the doubling
     // jump must engage (round 3+) for this to converge under maxIter

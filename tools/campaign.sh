@@ -44,6 +44,15 @@ LOG=/tmp/r${R}_campaign.log
 
 log() { echo "$(date -u +%H:%M:%S) $1" >> "$LOG"; }
 
+# Rep methodology, identical for both sides of the interleaved A/B so
+# the gate compares like with like: heavy-tail rep boost (r17) — queries
+# with base median > 1.5 s get 7 pooled reps, the >1.5 s tail carried
+# the r16 interleaved p90 spread of 0.635 — and rep isolation (r18,
+# Timing.releaseResidue between reps). A prior head that predates one
+# of these variables ignores it; the gate then mixes methodologies, as
+# OPTIMIZATION_r18.md records for r18.
+BENCH_ENV="SPARK_GRAFT_BENCH_HEAVY_REPS=7 SPARK_GRAFT_BENCH_ISOLATE=1"
+
 stress() { # $1 replicas  $2 workdir  $3 out  $4 only(optional)
   log "stress start replicas=$1 out=$3"
   if [ -n "${4:-}" ]; then
@@ -60,15 +69,12 @@ stress() { # $1 replicas  $2 workdir  $3 out  $4 only(optional)
 
 bench() { # $1 out
   log "bench start out=$1"
-  # heavy-tail rep boost (r17): queries with base median > 1.5 s get 7
-  # pooled reps — the >1.5 s tail carried the r16 interleaved p90
-  # spread of 0.635 (prev-head Bench predates the env and ignores it)
   # BENCH_SIDE routed to /tmp during the campaign: the default repo-root
   # copy would dirty the tree after the first run and poison every later
   # run's head_sha stamp (the merge tools reject sha mismatches); the
   # committed BENCH_SIDE.json is copied from the fresh run at the end
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT=$1 \
-    SPARK_GRAFT_BENCH_SIDE=$1.side SPARK_GRAFT_BENCH_HEAVY_REPS=7 \
+    SPARK_GRAFT_BENCH_SIDE=$1.side env $BENCH_ENV \
     java $JOPTS $COMMON -cp "$CP" graft.Bench \
     >> /tmp/r${R}_bench_stdout.log 2>> /tmp/r${R}_bench_stderr.log
   log "bench done rc=$? out=$1"
@@ -77,7 +83,7 @@ bench() { # $1 out
 benchPrev() { # $1 out — PRIOR-round-head bench from the detached
   # worktree, cwd inside it so Timing.headSha stamps the prior sha
   log "bench(prev $PREV_SHA) start out=$1"
-  (cd "$PREV_WT" && \
+  (cd "$PREV_WT" && export $BENCH_ENV && \
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT=$1 \
     java $JOPTS $COMMON -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench) \
     >> /tmp/r${R}_bench_stdout.log 2>> /tmp/r${R}_bench_stderr.log
